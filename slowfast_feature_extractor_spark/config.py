@@ -18,7 +18,6 @@ class FeaturizerConfig:
     slow_rows: int = 64
     fast_len: int = 32
     slow_len: int = 8
-    session_gap_s: float = 30 * 24 * 3600.0
     buckets: int = 64
     batch_id: str = "batch-0"
     cpus: str = "*"

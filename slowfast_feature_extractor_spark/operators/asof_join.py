@@ -78,7 +78,10 @@ def asof_join(
     ``chunk``: optional expression over the ``on`` column (MUST be
     monotone in it, e.g. ``F.to_date(F.col("ts"))``) enabling the
     skew-robust chunked plan — see module docstring. Same results,
-    partitioned by (by, chunk) instead of (by).
+    partitioned by (by, chunk) instead of (by). The chunked plan
+    persists the merged left+right stream (``MEMORY_AND_DISK``) and the
+    cache outlives the call: release it (``spark.catalog.clearCache()``)
+    once the result has been consumed.
     """
     if how not in ("left", "inner"):
         raise ValueError(f"how must be 'left' or 'inner', got {how!r}")

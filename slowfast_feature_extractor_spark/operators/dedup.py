@@ -596,6 +596,10 @@ def _verify_candidates(
             F.size("__sa").alias("sz_a"),
             F.size("__sb").alias("sz_b"),
         )
+        # a candidate sharing no shingle is not a pair (the shingle join
+        # this replaced never emitted one); without the filter it would
+        # pass any threshold <= 0 with jaccard 0.0
+        .filter(F.col("inter") > 0)
         .withColumn(
             "jaccard",
             F.round(

@@ -457,7 +457,13 @@ def knn_ivf(
     no iterations — fully replayable by a SQL oracle (the
     ``semantic_dedup`` pattern), with squared distances rounded to 6
     decimals before ranking so GEMM-computed and pairwise-computed
-    floats order identically across engines."""
+    floats order identically across engines.
+
+    Full probe (``n_probe >= n_cells``) silently runs
+    ``quantizer="kmeans"`` as ``"seed"`` and ignores ``fit_fraction``:
+    every query then scores every corpus row, so the top-k output is
+    identical whatever the centroids, but the cell assignments are the
+    seed quantizer's, not a fitted KMeans's."""
     import numpy as np
 
     if n_probe >= n_cells and quantizer == "kmeans":

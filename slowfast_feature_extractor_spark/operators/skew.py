@@ -21,6 +21,13 @@ full history. Unbounded aggregates (``n_hist_rows``) come from a
 per-chunk prefix-count table (cumsum over the tiny
 (entity, chunk, count) relation).
 
+Every chunked window operator (:func:`sessionize_chunked`,
+:func:`dual_rate_features_chunked`, the pages flagship's chunked plan)
+runs on ONE skeleton: :func:`_carry_window` unions the carries in and
+pins the (entity, chunk) shuffle, the operator adds its window columns,
+and :func:`_with_chunk_prefix` drops the carries and adds the earlier
+chunks' total (:func:`_chunk_cumsum`).
+
 Equality with the single-partition operator is exact and tested
 (tests/test_skew.py): same columns, same values, any chunking.
 """
@@ -125,20 +132,67 @@ def chunk_carries(
     )
 
 
-def chunk_prefix_counts(base: DataFrame, entity: str) -> DataFrame:
-    """(entity, __chunk, __prefix) — rows strictly before each chunk,
-    from a cumsum over the tiny per-chunk count relation (feeds the
-    unbounded aggregates that a bounded carry cannot reconstruct)."""
-    counts = base.groupBy(entity, "__chunk").agg(F.count(F.lit(1)).alias("__cnt"))
+def _chunk_cumsum(per_chunk: DataFrame, entity: str, col: str) -> DataFrame:
+    """(entity, __chunk, __prefix): the sum of ``col`` over the entity's
+    earlier chunks, from the tiny one-row-per-chunk relation."""
     w_chunks = (
         Window.partitionBy(entity)
         .orderBy("__chunk")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    return counts.select(
+    return per_chunk.select(
         entity,
         "__chunk",
-        F.coalesce(F.sum("__cnt").over(w_chunks), F.lit(0)).alias("__prefix"),
+        F.coalesce(F.sum(col).over(w_chunks), F.lit(0)).alias("__prefix"),
+    )
+
+
+def chunk_prefix_counts(base: DataFrame, entity: str) -> DataFrame:
+    """(entity, __chunk, __prefix) — rows strictly before each chunk,
+    from a cumsum over the tiny per-chunk count relation (feeds the
+    unbounded aggregates that a bounded carry cannot reconstruct)."""
+    counts = base.groupBy(entity, "__chunk").agg(F.count(F.lit(1)).alias("__cnt"))
+    return _chunk_cumsum(counts, entity, "__cnt")
+
+
+def _carry_window(
+    base: DataFrame, carries: DataFrame, entity: str, order_cols: list[str]
+) -> tuple[DataFrame, Window]:
+    """The skeleton every chunked operator runs on: ``base`` (holding
+    ``__chunk``) unioned with its ``carries``, tagged ``__carry`` (1 on
+    carry rows, which come from earlier chunks and so sort first), and
+    the (entity, __chunk) window ordered by ``order_cols``."""
+    merged = base.withColumn("__carry", F.lit(0)).unionByName(
+        carries.withColumn("__carry", F.lit(1))
+    )
+    # pin the window's partition count: the (entity, chunk) shuffle is
+    # tiny in BYTES, so AQE's advisory-size coalescing collapses it to a
+    # handful of partitions and serializes the window stage (measured on
+    # the pages flagship: 139 day-chunks ran on 5 partitions, 8.8s vs
+    # 2.6s); an explicit-count repartition is exempt from AQE coalesce
+    # and already satisfies the window's clustering requirement
+    n_part = shuffle_partition_count(base.sparkSession)
+    merged = merged.repartition(n_part, entity, "__chunk")
+    w = Window.partitionBy(entity, "__chunk").orderBy(
+        *[F.col(c).asc() for c in order_cols]
+    )
+    return merged, w
+
+
+def _with_chunk_prefix(
+    windowed: DataFrame, entity: str, prefix: DataFrame, local_col: str, out_col: str
+) -> DataFrame:
+    """Finish a :func:`_carry_window` pass: drop the carry rows and set
+    ``out_col = coalesce(__prefix, 0) + local_col`` from the per-chunk
+    ``prefix`` relation (entity, __chunk, __prefix), dropping the
+    skeleton's bookkeeping columns. The tiny prefix relation is joined
+    on the window's own partition keys — the big side keeps its
+    partitioning (no extra exchange)."""
+    return (
+        windowed.filter(F.col("__carry") == 0)
+        .join(prefix, [entity, "__chunk"], "left")
+        .withColumn(out_col, F.coalesce(F.col("__prefix"), F.lit(0)) + F.col(local_col))
+        .drop("__chunk", "__carry", "__prefix", local_col)
     )
 
 
@@ -180,19 +234,8 @@ def sessionize_chunked(
     cols = [c for c in df.columns if c not in (index_col, session_col)]
     base = df.drop(index_col, session_col).withColumn("__chunk", chunk_expr)
     carries = chunk_carries(base, entity, order_cols, slow_rows=1)
+    merged, w = _carry_window(base, carries, entity, order_cols)
 
-    merged = base.withColumn("__carry", F.lit(0)).unionByName(
-        carries.withColumn("__carry", F.lit(1))
-    )
-    # pin the window's partition count (AQE advisory-size coalescing
-    # collapses byte-tiny (entity, chunk) shuffles — see the chunked
-    # window operators above)
-    n_part = shuffle_partition_count(df.sparkSession)
-    merged = merged.repartition(n_part, entity, "__chunk")
-
-    w = Window.partitionBy(entity, "__chunk").orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
     prev = F.lag(F.col(ts)).over(w)
     is_new = F.when(
         (F.col("__carry") == 0)
@@ -200,39 +243,27 @@ def sessionize_chunked(
         F.lit(1),
     ).otherwise(F.lit(0))
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = merged.withColumn("__local_idx", F.sum(is_new).over(run)).filter(
-        F.col("__carry") == 0
-    )
+    windowed = merged.withColumn("__local_idx", F.sum(is_new).over(run))
     # TWO consumers (the output rows and the per-chunk session-start
     # prefix): without a persist the starts branch re-executes the whole
     # scan→tails→fold→union→window chain — the projections differ, so
     # Catalyst plans twin subtrees and ReusedExchange never fires
     # (measured: the twin 48-task map stages were the top-2 stages of
-    # the sf1.0 profile, ~250 s of the 287 s total executor time)
-    local = local.persist(StorageLevel.MEMORY_AND_DISK)
-
+    # the sf1.0 profile, ~250 s of the 287 s total executor time). The
+    # cache matches by plan, so _with_chunk_prefix's identical carry
+    # filter below reads it too.
+    local = windowed.filter(F.col("__carry") == 0).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     starts = local.groupBy(entity, "__chunk").agg(
         F.max("__local_idx").alias("__starts")
     )
-    w_chunks = (
-        Window.partitionBy(entity)
-        .orderBy("__chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefix = starts.select(
-        entity,
-        "__chunk",
-        F.coalesce(F.sum("__starts").over(w_chunks), F.lit(0)).alias("__prefix"),
-    )
-    out = (
-        local.join(prefix, [entity, "__chunk"], "left")
-        .withColumn(
-            index_col, F.coalesce(F.col("__prefix"), F.lit(0)) + F.col("__local_idx")
-        )
-        .withColumn(
-            session_col,
-            F.concat_ws("#", F.col(entity).cast("string"), F.col(index_col)),
-        )
+    prefix = _chunk_cumsum(starts, entity, "__starts")
+    out = _with_chunk_prefix(
+        windowed, entity, prefix, "__local_idx", index_col
+    ).withColumn(
+        session_col,
+        F.concat_ws("#", F.col(entity).cast("string"), F.col(index_col)),
     )
     return out.select(*cols, index_col, session_col)
 
@@ -284,39 +315,17 @@ def dual_rate_features_chunked(
     carries = chunk_carries(base, entity, order_cols, slow_rows)
     prefix = chunk_prefix_counts(base, entity)
 
-    # --- merged window pass over (entity, chunk): carry rows sort first
-    # (they come from strictly earlier chunks, hence earlier ts)
-    merged = base.withColumn("__carry", F.lit(0)).unionByName(
-        carries.withColumn("__carry", F.lit(1))
-    )
-    # pin the window's partition count (same AQE advisory-size pitfall
-    # as the carry fold above: a byte-tiny (entity, chunk) shuffle
-    # coalesces to a handful of partitions and serializes the window
-    # stage); explicit-count repartition is exempt and satisfies the
-    # window's clustering requirement
-    n_part = shuffle_partition_count(df.sparkSession)
-    merged = merged.repartition(n_part, entity, "__chunk")
-    w = Window.partitionBy(entity, "__chunk").orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
+    merged, w = _carry_window(base, carries, entity, order_cols)
     out = emit_rate_aggs(
         merged, w, measure, end,
         ((prefix_fast, fast_rows), (prefix_slow, slow_rows)), round_to,
     )
     hist = w.rowsBetween(Window.unboundedPreceding, end)
-    out = (
-        out.withColumn(
-            "__local_hist",
-            F.count(F.when(F.col("__carry") == 0, F.lit(1))).over(hist),
-        )
-        .withColumn("max_input_ts", F.max(F.col(ts)).over(hist))
-        .filter(F.col("__carry") == 0)
-    )
-    # join the tiny prefix relation on the window's own partition keys —
-    # the big side keeps its partitioning (no extra exchange)
-    out = out.join(prefix, [entity, "__chunk"], "left").withColumn(
-        "n_hist_rows", F.coalesce(F.col("__prefix"), F.lit(0)) + F.col("__local_hist")
-    )
+    out = out.withColumn(
+        "__local_hist",
+        F.count(F.when(F.col("__carry") == 0, F.lit(1))).over(hist),
+    ).withColumn("max_input_ts", F.max(F.col(ts)).over(hist))
+    out = _with_chunk_prefix(out, entity, prefix, "__local_hist", "n_hist_rows")
     return out.select(
         entity,
         *order_cols,

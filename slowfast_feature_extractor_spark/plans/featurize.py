@@ -23,7 +23,8 @@ break the time ordering within an entity).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from slowfast_feature_extractor_spark.functions.extraction import extract_text_udf
@@ -31,9 +32,12 @@ from slowfast_feature_extractor_spark.functions.vector import resample_udf
 from slowfast_feature_extractor_spark.operators.asof_join import asof_join
 from slowfast_feature_extractor_spark.operators.sessionize import sessionize  # noqa: F401
 from slowfast_feature_extractor_spark.operators.skew import (
+    _carry_window,
+    _with_chunk_prefix,
     chunk_carries,
     chunk_prefix_counts,
-    shuffle_partition_count,
+    dual_rate_features_chunked,
+    sessionize_chunked,
 )
 from slowfast_feature_extractor_spark.operators.windows import dual_rate_features
 
@@ -66,35 +70,15 @@ def _plan_is_bare_scan(df: DataFrame) -> bool:
     )
 
 
-def _footer_rows_sampled(df: DataFrame, max_footers: int = 256) -> int | None:
-    """Zero-job row estimate for scans too wide for the exact footer
-    pass (:func:`similarity._estimate_rows` caps at 256 files): read an
-    evenly strided SAMPLE of footers and scale by the file count. A
-    performance-decision estimate, not a correctness input."""
-    try:
-        import pyarrow.parquet as pq
-
-        files = [
-            f[7:] if f.startswith("file://") else f for f in df.inputFiles()
-        ]
-        if not files or not all(f.endswith(".parquet") for f in files):
-            return None
-        stride = max(1, len(files) // max_footers)
-        sample = files[::stride][:max_footers]
-        tot = sum(pq.ParquetFile(p).metadata.num_rows for p in sample)
-        return int(tot * len(files) / len(sample))
-    except Exception:
-        return None
-
-
 def _hot_entity_sketch(
-    df: DataFrame, entity: str, total: int, sample_rows: int = 200_000
+    df: DataFrame, entity: str, sample_rows: int = 200_000
 ) -> float | None:
     """DRIVER-side hot-entity estimate with ZERO Spark jobs: read the
     ``entity`` column of parquet row groups spread evenly across the
     WHOLE scan (pyarrow, footers + a bounded number of column chunks),
     then scale the sample's max multiplicity by total/sampled (capped
-    at ``total``).
+    at ``total``, the exact row count summed from every footer's
+    row-group sizes in the same pass).
 
     The sampled units are chosen up front from the full unit list —
     never by reading in file order until a row budget fills, which
@@ -124,10 +108,11 @@ def _hot_entity_sketch(
             )
         if not units:
             return None
+        total = sum(u[2] for u in units)
         # pick the sample SET first — k units evenly strided across the
         # whole list, k sized so expected rows ≈ sample_rows — then read
         # all of it (no early break: coverage must span the entire scan)
-        avg = max(1, sum(u[2] for u in units) // len(units))
+        avg = max(1, total // len(units))
         k = max(1, min(len(units), sample_rows // avg))
         stride = max(1, len(units) // k)
         chosen = units[::stride][:k]
@@ -184,20 +169,18 @@ def auto_chunk_decision(
     from slowfast_feature_extractor_spark.operators.similarity import _estimate_rows
 
     if _plan_is_bare_scan(df):
-        # exact footer total up to 256 files; above that, an evenly
-        # strided footer SAMPLE scaled by file count — still zero jobs.
-        # Without this, a >256-file table fell through to the eager
-        # count below, silently violating the zero-job-for-bare-scans
-        # contract exactly where the extra job is most expensive.
+        # exact footer total up to 256 files decides the small case
+        # early; wider scans go straight to the sketch, whose footer
+        # pass sums the exact total over EVERY file — still zero jobs.
+        # Without it, a >256-file table fell through to the eager count
+        # below, silently violating the zero-job-for-bare-scans contract
+        # exactly where the extra job is most expensive.
         est = _estimate_rows(df)
-        if est is None:
-            est = _footer_rows_sampled(df)
-        if est is not None:
-            if est < threshold:
-                return None
-            hot = _hot_entity_sketch(df, entity, est)
-            if hot is not None:
-                return "day" if hot >= threshold else None
+        if est is not None and est < threshold:
+            return None
+        hot = _hot_entity_sketch(df, entity)
+        if hot is not None:
+            return "day" if hot >= threshold else None
     try:
         plan_key = int(df._jdf.queryExecution().analyzed().semanticHash())
     except Exception:
@@ -276,7 +259,10 @@ def featurize_pages(
       plan (parity-tested); requires ``fast_rows <= slow_rows`` and a
       chunk no finer than the day anchors (so every chunk's first real
       row is an anchor and the slow-pathway carry-forward never has to
-      cross a chunk boundary).
+      cross a chunk boundary). The chunked plan persists its post-
+      extraction projection (``MEMORY_AND_DISK``) and the cache outlives
+      the call: release it (``spark.catalog.clearCache()``) once the
+      result has been consumed.
     """
     # Stage 1 (embarrassingly parallel): extraction UDF evaluated EXACTLY
     # once per row — the plan below never branches before this point, so
@@ -306,12 +292,13 @@ def featurize_pages(
         # evaluated-EXACTLY-once invariant instead of re-running per
         # branch (pit_dual_rate_chunked_from does the same for its
         # sessionized stream)
-        from pyspark import StorageLevel
-
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         windowed = _windowed_chunked(df, order, fast_rows, slow_rows, chunk_trunc)
     else:
-        windowed = _windowed_plain(df, order, fast_rows, slow_rows)
+        w = Window.partitionBy("url").orderBy(*order)
+        windowed = _pages_window_family(
+            df, w, fast_rows, slow_rows, "n_hist_rows", F.count(F.lit(1))
+        )
     out = windowed.withColumn(
         "fast_vec", resample_udf(fast_len)(F.col("__fast_raw"))
     ).withColumn("slow_vec", resample_udf(slow_len)(F.col("__slow_raw")))
@@ -327,10 +314,13 @@ def featurize_pages(
     )
 
 
-def _windowed_plain(
-    df: DataFrame, order: list[str], fast_rows: int, slow_rows: int
+def _pages_window_family(
+    df: DataFrame, w: Window, fast_rows: int, slow_rows: int,
+    hist_col: str, hist_count: Column,
 ) -> DataFrame:
-    w = Window.partitionBy("url").orderBy(*order)
+    """The flagship's window family over ``w`` (per url, or per
+    (url, __chunk) in the chunked plan); ``hist_count`` is the history
+    aggregate stored as ``hist_col`` (the chunked plan masks carries)."""
     fast_frame = w.rowsBetween(-fast_rows, -1)
     slow_frame = w.rowsBetween(-slow_rows, -1)
     hist_frame = w.rowsBetween(Window.unboundedPreceding, -1)
@@ -353,7 +343,7 @@ def _windowed_plain(
             "__slow_at_anchor",
             F.when(is_anchor, F.collect_list("measure").over(slow_frame)),
         )
-        .withColumn("n_hist_rows", F.count(F.lit(1)).over(hist_frame))
+        .withColumn(hist_col, hist_count.over(hist_frame))
         .withColumn("max_input_ts", F.max("warc_ts").over(hist_frame))
         .withColumn(
             "__slow_raw", F.last("__slow_at_anchor", ignorenulls=True).over(carry_frame)
@@ -370,7 +360,7 @@ def _windowed_chunked(
 ) -> DataFrame:
     """The flagship window family over (url, time-chunk) partitions —
     range-partition-with-carry (operators/skew.py), exactly equal to
-    :func:`_windowed_plain`.
+    the plain per-url plan.
 
     Why exactness holds with day-or-coarser chunks:
 
@@ -399,52 +389,12 @@ def _windowed_chunked(
     carries = chunk_carries(base, "url", order, slow_rows)
     prefix = chunk_prefix_counts(base, "url")
 
-    merged = base.withColumn("__carry", F.lit(0)).unionByName(
-        carries.withColumn("__carry", F.lit(1))
+    merged, w = _carry_window(base, carries, "url", order)
+    windowed = _pages_window_family(
+        merged, w, fast_rows, slow_rows, "__local_hist",
+        F.count(F.when(F.col("__carry") == 0, F.lit(1))),
     )
-    # pin the window's partition count: the (url, chunk) shuffle is tiny
-    # in BYTES, so AQE's advisory-size coalescing collapses it to a
-    # handful of partitions and serializes the window + resample-UDF
-    # stage (measured: 139 day-chunks ran on 5 partitions, 8.8s vs 2.6s);
-    # an explicit-count repartition is exempt from AQE coalesce and
-    # already satisfies the window's clustering requirement
-    n_part = shuffle_partition_count(df.sparkSession)
-    merged = merged.repartition(n_part, "url", "__chunk")
-    w = Window.partitionBy("url", "__chunk").orderBy(*[F.col(c).asc() for c in order])
-    fast_frame = w.rowsBetween(-fast_rows, -1)
-    slow_frame = w.rowsBetween(-slow_rows, -1)
-    hist_frame = w.rowsBetween(Window.unboundedPreceding, -1)
-    carry_frame = w.rowsBetween(Window.unboundedPreceding, 0)
-
-    day = F.to_date("warc_ts")
-    is_anchor = F.lag(day).over(w).isNull() | (F.lag(day).over(w) != day)
-
-    windowed = (
-        merged.withColumn("__fast_raw", F.collect_list("measure").over(fast_frame))
-        .withColumn(
-            "__slow_at_anchor",
-            F.when(is_anchor, F.collect_list("measure").over(slow_frame)),
-        )
-        .withColumn(
-            "__local_hist",
-            F.count(F.when(F.col("__carry") == 0, F.lit(1))).over(hist_frame),
-        )
-        .withColumn("max_input_ts", F.max("warc_ts").over(hist_frame))
-        .withColumn(
-            "__slow_raw", F.last("__slow_at_anchor", ignorenulls=True).over(carry_frame)
-        )
-        .filter(F.col("__carry") == 0)
-    )
-    # tiny per-chunk relation joined on the window's own partition keys —
-    # the big side keeps its partitioning (no extra exchange)
-    return (
-        windowed.join(prefix, ["url", "__chunk"], "left")
-        .withColumn(
-            "n_hist_rows",
-            F.coalesce(F.col("__prefix"), F.lit(0)) + F.col("__local_hist"),
-        )
-        .drop("__chunk", "__carry", "__local_hist", "__prefix")
-    )
+    return _with_chunk_prefix(windowed, "url", prefix, "__local_hist", "n_hist_rows")
 
 
 def featurize_sessions(
@@ -524,15 +474,14 @@ def pit_dual_rate_chunked_from(
     :func:`pit_dual_rate_from` (each stage is parity-tested and the
     composition is driver-checked against the SAME oracle), so a
     million-event user parallelizes across its chunks at every stage
-    instead of serializing the pipeline through one task."""
-    from pyspark.sql import functions as _F
+    instead of serializing the pipeline through one task.
 
-    from slowfast_feature_extractor_spark.operators.skew import (
-        dual_rate_features_chunked,
-        sessionize_chunked,
-    )
-
-    chunk = _F.date_trunc(chunk_trunc, _F.col("ts"))
+    The plan persists intermediates (``MEMORY_AND_DISK``: the
+    sessionized stream, the sessionizer's window output and the as-of
+    join's merged stream) that outlive the call; release them
+    (``spark.catalog.clearCache()``) once the result has been
+    consumed."""
+    chunk = F.date_trunc(chunk_trunc, F.col("ts"))
     ev = sessionize_chunked(
         ev, entity="user_id", ts="ts", gap_seconds=session_gap_s,
         tiebreak="event_id", chunk=chunk,
@@ -541,8 +490,6 @@ def pit_dual_rate_chunked_from(
     # read the sessionized stream; persist it so the chunked
     # sessionizer's carry fold runs once, not per branch (columnar
     # batches, spills past memory)
-    from pyspark import StorageLevel
-
     ev = ev.persist(StorageLevel.MEMORY_AND_DISK)
 
     # event_type/session_idx ride through the window pass (inert carry
@@ -568,39 +515,7 @@ def pit_dual_rate_chunked_from(
         F.col("slow_view_avg"), F.col("slow_view_cnt"),
     )
 
-    clicks = (
-        feats.filter(F.col("event_type") == "click")
-        .select(
-            "user_id", "ts", "event_id", "session_idx",
-            F.round("fast_avg", 6).alias("fast_avg"),
-            F.col("fast_cnt"),
-            F.round("slow_avg", 6).alias("slow_avg"),
-            F.col("slow_cnt"),
-        )
-    )
-    out = asof_join(
-        clicks,
-        view_feats,
-        on="ts",
-        by=("user_id",),
-        right_cols=["slow_view_avg", "slow_view_cnt"],
-        allow_exact_matches=True,
-        matched_ts_col="view_ts",
-        chunk=_F.date_trunc(chunk_trunc, _F.col("ts")),
-    )
-    return out.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "session_idx",
-        "fast_avg",
-        "fast_cnt",
-        "slow_avg",
-        "slow_cnt",
-        "view_ts",
-        F.round("slow_view_avg", 6).alias("slow_view_avg"),
-        "slow_view_cnt",
-    )
+    return _clicks_asof_views(feats, view_feats, chunk=chunk)
 
 
 def pit_dual_rate_auto(
@@ -664,7 +579,18 @@ def pit_dual_rate_from(
         F.count("value_cents").over(vw).alias("slow_view_cnt"),
     )
 
-    clicks = fast.filter(F.col("event_type") == "click").select(
+    return _clicks_asof_views(fast, view_feats)
+
+
+def _clicks_asof_views(
+    feats: DataFrame, view_feats: DataFrame, chunk: Column | None = None
+) -> DataFrame:
+    """Tail shared by both events flagships: project the click rows of
+    the feature table, attach the latest view features as of each click
+    (``asof_join``, chunked when ``chunk`` is given) and emit the
+    oracle's column set (rounded to 6 decimals so the DuckDB oracle
+    hashes identically)."""
+    clicks = feats.filter(F.col("event_type") == "click").select(
         "user_id",
         "ts",
         "event_id",
@@ -682,6 +608,7 @@ def pit_dual_rate_from(
         right_cols=["slow_view_avg", "slow_view_cnt"],
         allow_exact_matches=True,
         matched_ts_col="view_ts",
+        chunk=chunk,
     )
     return out.select(
         "user_id",

@@ -11,10 +11,10 @@ from slowfast_feature_extractor_spark.sources.pages import pages_spark_schema
 def test_config_from_args():
     cfg = FeaturizerConfig.from_args(
         ["--input-path", "/i", "--output-path", "/o", "--ledger-path", "/l",
-         "--fast-rows", "16", "--session-gap-s", "60.5"]
+         "--fast-rows", "16"]
     )
     assert cfg.input_path == "/i" and cfg.fast_rows == 16
-    assert cfg.session_gap_s == 60.5 and cfg.slow_rows == 64
+    assert cfg.slow_rows == 64
 
 
 def test_backfill_job_end_to_end(spark, pages_pd, tmp_path):

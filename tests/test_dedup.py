@@ -234,6 +234,23 @@ def test_minhash_broadcast_guard_falls_back(docs):
     assert guarded == base
 
 
+
+@pytest.mark.parametrize("broadcast_limit", [1_000_000, 0])
+def test_verify_drops_disjoint_candidates_at_zero_threshold(spark, broadcast_limit):
+    """A candidate pair that shares no shingle is not a pair, whatever
+    the threshold: at threshold 0.0 it must not surface as jaccard 0.0,
+    in either verification join shape."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "one two three four"),
+         (3, "alpha beta gamma zeta")],
+        schema="doc_id long, text string",
+    )
+    sh = DD.shingle_table(docs)
+    cand = spark.createDataFrame([(1, 2), (1, 3)], schema="id_a long, id_b long")
+    out = {(r.id_a, r.id_b): r.jaccard for r in
+           DD._verify_candidates(sh, cand, 0.0, broadcast_limit).collect()}
+    assert out == {(1, 3): pytest.approx(1 / 3, abs=1e-6)}
+
 def test_lsh_params_s_curve():
     """lsh_params returns a banding whose S-curve meets the recall
     target at the threshold and keeps low-sim collisions rare."""

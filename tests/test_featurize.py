@@ -182,11 +182,32 @@ def test_auto_chunk_zero_jobs_on_bare_scan(spark, tmp_path, pages_pd):
 
     # case 3: total above threshold, hot entity holds >= threshold rows
     # -> sketch flags it -> chunked, zero jobs
-    hot = _hot_entity_sketch(df, "url", n_rows)
+    hot = _hot_entity_sketch(df, "url")
     per_url = pages_pd.groupby("url").size().max()
     assert hot is not None and hot >= per_url * 0.5
     before = tracker.getJobIdsForGroup(None)
     assert auto_chunk_decision(df, "url", threshold=int(per_url)) == "day"
+    assert tracker.getJobIdsForGroup(None) == before
+
+    # case 4: a scan wider than the 256-file exact footer bound (two
+    # appends of one-row files): no early footer exit, the sketch sums
+    # the exact total from every footer itself — still zero jobs
+    from slowfast_feature_extractor_spark.operators.similarity import _estimate_rows
+
+    wide_path = str(tmp_path / "pages_wide.parquet")
+    one_row_files = spark.createDataFrame(pages_pd, schema=pages_spark_schema())
+    for _ in range(2):
+        one_row_files.write.option("maxRecordsPerFile", 1).mode("append").parquet(
+            wide_path
+        )
+    wide = spark.read.parquet(wide_path)
+    assert len(wide.inputFiles()) == 2 * n_rows > 256
+    assert _estimate_rows(wide) is None
+    before = tracker.getJobIdsForGroup(None)
+    assert _hot_entity_sketch(wide, "url") == 2 * per_url
+    assert auto_chunk_decision(wide, "url", threshold=int(2 * per_url)) == "day"
+    assert auto_chunk_decision(wide, "url", threshold=int(2 * per_url) + 1) is None
+    assert auto_chunk_decision(wide, "url", threshold=2 * n_rows + 1) is None
     assert tracker.getJobIdsForGroup(None) == before
 
     # composed input: falls back to ONE exact groupBy, memoized

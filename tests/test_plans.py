@@ -4,7 +4,10 @@ refactor that silently adds a shuffle or drops a pushdown fails CI."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from pyspark.sql import functions as F
 
 from slowfast_feature_extractor_spark.plans.featurize import featurize_pages
 from slowfast_feature_extractor_spark.plans.queries import REGISTRY
@@ -24,6 +27,68 @@ def test_featurize_single_shuffle(spark, pages_df):
     assert plan.count("+- Sort") == 1
     assert plan.count("extract_text_udf") == 1
     assert plan.count("ArrowEvalPython") == 2  # extraction head + resamples tail
+
+
+def _events(spark):
+    return spark.read.parquet(f"{SF_TINY}/events.parquet").withColumn(
+        "value_cents", F.round(F.col("value") * 100).cast("long")
+    )
+
+
+def test_pit_dual_rate_plain_two_exchanges(spark):
+    """The plain events flagship: sessionize and the click-side window
+    families share one user_id exchange, the view windows take the
+    other, and the as-of window runs on the union of the two without a
+    third shuffle."""
+    from slowfast_feature_extractor_spark.plans.featurize import pit_dual_rate_from
+
+    assert _plan(pit_dual_rate_from(_events(spark))).count("Exchange") == 2
+
+
+def _chunk_window_feeds(plan: str, entity: str) -> list[str]:
+    """The Exchange under every ascending (entity, __chunk) Window of a
+    physical plan — the first Exchange printed below the Window line
+    (the chunk-tail windows, ordered DESC, are not matched)."""
+    head = re.compile(rf"\], \[{entity}#\d+L?, __chunk#\d+\], \[[^\]]* ASC")
+    lines = plan.splitlines()
+    feeds = []
+    for i, line in enumerate(lines):
+        if "Window [" in line and head.search(line):
+            feeds.append(next(x for x in lines[i + 1:] if "Exchange" in x))
+    return feeds
+
+
+@pytest.mark.parametrize("op", ["dual_rate", "sessionize", "pages"])
+def test_chunk_window_partition_count_pinned(spark, pages_df, op):
+    """Every chunked operator feeds its (entity, __chunk) window from an
+    explicit-count repartition: AQE never coalesces a REPARTITION_BY_NUM
+    exchange, so a byte-tiny chunk shuffle keeps its full width instead
+    of collapsing onto a handful of window tasks."""
+    from slowfast_feature_extractor_spark.operators.skew import (
+        dual_rate_features_chunked,
+        sessionize_chunked,
+    )
+
+    if op == "dual_rate":
+        df, entity = dual_rate_features_chunked(
+            _events(spark), entity="user_id", ts="ts", measure="value_cents",
+            tiebreak="event_id",
+        ), "user_id"
+    elif op == "sessionize":
+        df, entity = sessionize_chunked(
+            _events(spark), entity="user_id", ts="ts", gap_seconds=1800.0,
+            tiebreak="event_id",
+        ), "user_id"
+    else:
+        df, entity = featurize_pages(pages_df, chunk_trunc="day"), "url"
+    try:
+        feeds = _chunk_window_feeds(_plan(df), entity)
+    finally:
+        spark.catalog.clearCache()  # the chunked plans persist intermediates
+    assert feeds
+    for feed in feeds:
+        assert re.search(rf"hashpartitioning\({entity}#\d+L?, __chunk#\d+, 8\)", feed)
+        assert "REPARTITION_BY_NUM" in feed
 
 
 def test_pushdown_reaches_scan(spark):
